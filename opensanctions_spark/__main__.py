@@ -23,7 +23,7 @@ import sys
 
 
 def _cmd_run(args: argparse.Namespace) -> int:
-    from opensanctions_spark.plans.run import Assertion, DatasetConfig, run_dataset
+    from opensanctions_spark.plans.run import DatasetConfig, run_dataset
     from opensanctions_spark.session import get_session
     from opensanctions_spark.sources.archive import StatementArchive
 
@@ -34,13 +34,9 @@ def _cmd_run(args: argparse.Namespace) -> int:
             print("error: either --config or --dataset is required",
                   file=sys.stderr)
             return 2
-        assertions = []
-        for spec in args.asserts or []:
-            metric, op, threshold = spec.rsplit(":", 2)
-            assertions.append(
-                Assertion(metric=metric, op=op, threshold=int(threshold))
-            )
-        config = DatasetConfig(name=args.dataset, assertions=assertions)
+        config = DatasetConfig.from_dict(
+            {"name": args.dataset, "assertions": args.asserts or []}
+        )
     spark = get_session(f"osp-run-{config.name}")
     spark.sparkContext.setLogLevel("WARN")
     statements = spark.read.parquet(args.statements)
@@ -183,19 +179,18 @@ def _cmd_analyze(args: argparse.Namespace) -> int:
 def _cmd_validate(args: argparse.Namespace) -> int:
     """`zavod validate` analogue: rebuild the entity view from the
     archive and run validators + assertions without exporting."""
-    from opensanctions_spark.plans.run import Assertion, validate_dataset
+    from opensanctions_spark.plans.run import DatasetConfig, validate_dataset
     from opensanctions_spark.session import get_session
     from opensanctions_spark.sources.archive import StatementArchive
 
     spark = get_session(f"osp-validate-{args.dataset}")
     spark.sparkContext.setLogLevel("WARN")
-    assertions = []
-    for spec in args.asserts or []:
-        metric, op, threshold = spec.rsplit(":", 2)
-        assertions.append(Assertion(metric=metric, op=op, threshold=int(threshold)))
+    config = DatasetConfig.from_dict(
+        {"name": args.dataset, "assertions": args.asserts or []}
+    )
     manifest = validate_dataset(
         spark, StatementArchive(spark, args.archive), args.dataset,
-        assertions=assertions, version=args.version,
+        assertions=config.assertions, version=args.version,
     )
     print(json.dumps(manifest, indent=2, default=str))
     return 1 if any(v.startswith("error") for v in manifest["violations"]) else 0

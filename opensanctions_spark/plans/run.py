@@ -1,21 +1,25 @@
-"""The full dataset run: crawl output → statements → entities → exports.
+"""The dataset lifecycle — crawl, validate, export — and the run that
+composes them (``zavod/zavod/cli/etl.py:24-154``). Each stage body is
+written once, as a private helper the public stages and ``run_dataset``
+share:
 
-Mirrors ``zavod run`` (``zavod/zavod/cli/etl.py:95-154``) as ONE Spark job
-graph:
-
-1. statements stamped with first_seen propagated from the previous
-   version (J1, ``zavod/zavod/runtime/timestamps.py``),
-2. versioned parquet write (the statements.pack + archive analogue),
-3. entity assembly (A1) — persisted once,
-4. validation: assertion thresholds with fatal-min semantics (A12,
+1. ``_stamp`` (crawl): datapatch lookups, seen timestamps, the resolver
+   rekey and first_seen from the previous successful version (J1,
+   ``zavod/zavod/runtime/timestamps.py``), then one versioned archive
+   write (the statements.pack analogue),
+2. ``_entity_view``: a version read back, rekeyed (``_rekey``) and
+   assembled (A1) — persisted once,
+3. ``_validate``: assertion thresholds with fatal-min semantics (A12,
    ``zavod/zavod/validators/assertions.py:24-183``) + dangling-reference
    anti-join (J10, ``zavod/zavod/validators/__init__.py:15-27``),
-5. every exporter off the shared scan (§2.2),
-6. delta vs the previous version (D0/D1) written alongside.
+4. every exporter off the shared scan (§2.2), then ``_write_delta``:
+   ADD/MOD/DEL vs a baseline version (D0/D1) + the delta index.
 
-The reference does store-sync into LevelDB between crawl and export; on
-Spark that whole stage *is* the assembly shuffle — there is no separate
-materialization.
+``run_dataset`` runs all four over ONE persisted entity view (the public
+stages each assemble their own). It writes its version pending and
+promotes it only after export, so a fatal assertion never advances the
+backfill pointer. The reference's LevelDB store-sync between crawl and
+export *is* the assembly shuffle here — no separate materialization.
 """
 
 from __future__ import annotations
@@ -27,10 +31,16 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from opensanctions_spark.exporters import export_all, prop_values
+from opensanctions_spark.exporters import export_all, prop_values, target_flag
+from opensanctions_spark.exporters.metadata import write_delta_index, write_issues
 from opensanctions_spark.model.registry import ENTITY_PROPS
 from opensanctions_spark.operators.assembly import assemble_entities
-from opensanctions_spark.operators.delta import hashed_entities, version_diff
+from opensanctions_spark.operators.delta import (
+    delta_export_rows,
+    hashed_entities,
+    version_diff,
+)
+from opensanctions_spark.operators.resolve import apply_canonical, mapping_fingerprint
 from opensanctions_spark.operators.timestamps import propagate_first_seen
 from opensanctions_spark.sources.archive import StatementArchive
 
@@ -335,116 +345,112 @@ def check_assertions(stats: dict[str, float], assertions: list[Assertion]) -> li
     return out
 
 
-def run_dataset(
-    spark: SparkSession,
-    statements: DataFrame,
-    config: DatasetConfig,
-    archive: StatementArchive,
-    out_dir: str,
-    run_time: str,
-    version: str | None = None,
-    canonical_map: DataFrame | None = None,
-    single_file: bool = True,
-) -> RunResult:
-    """Execute the full pipeline for one dataset run.
+def _map_fingerprint(canonical_map: DataFrame | None) -> str | None:
+    """One aggregation: each stage computes it once for every ``_rekey``."""
+    return None if canonical_map is None else mapping_fingerprint(canonical_map)
 
-    ``canonical_map`` is the resolver's (entity_id, canonical_id)
-    snapshot; when given, statements are rekeyed through it (J2,
-    broadcast) before assembly — the reference applies its linker the
-    same way, at store-read time (``zavod/zavod/store.py:36-47``), so
-    merged entities collapse into one canonical group in A1."""
-    # 1. first_seen propagation from the previous version (J1); both seen-
-    # timestamps are stamped at emit time like the reference's context.emit.
+
+def _rekey(statements: DataFrame, archive: StatementArchive, name: str,
+           version: str | None, canonical_map: DataFrame | None,
+           map_fp: str | None) -> tuple[DataFrame, bool]:
+    """Resolver rekey (J2) of one version's statements; returns them with
+    the flag that lets the assembly skip its clustering exchange.
+
+    The reference's linker applies to every store access
+    (``zavod/zavod/store.py:36-47``), so every version is normalized to
+    the CURRENT map — unless the manifest proves it was written under the
+    identical map (the fingerprint fast path), in which case its stored
+    canonical ids and bucket clustering are consumed as-is (§21c). The
+    round-11 rehearsal bug (prev diffed raw → spurious DEL per merged id)
+    stays fixed: both sides of J1 and D0/D1 are always map-consistent.
+    ``version=None`` marks statements not yet written: always rekeyed."""
+    if canonical_map is not None and (
+        version is None or archive.canonical_fp(name, version) != map_fp
+    ):
+        return apply_canonical(statements, canonical_map), False
+    return statements, archive.is_bucketed(name, version)
+
+
+def _stamp(statements: DataFrame, archive: StatementArchive, name: str,
+           run_time: str, lookups: dict | None,
+           canonical_map: DataFrame | None = None, map_fp: str | None = None,
+           ) -> tuple[DataFrame, DataFrame | None, str | None]:
+    """The crawl stage's stamping: datapatch lookups, both seen-timestamps
+    (stamped at emit time like the reference's context.emit), the
+    resolver rekey, then first_seen propagated from the previous version
+    (J1, ``zavod/zavod/runtime/timestamps.py``). Returns the stamped
+    statements, the previous version's statements (map-consistent with
+    the stamped ones) and that version's id."""
     # "previous" = last SUCCESSFUL run — a version written by a run that
-    # later failed validation must not feed timestamps or deltas.
-    prev_version = archive.last_successful(config.name)
-    # external=True: the first_seen index must cover external statements
-    # too (see crawl_dataset — an internal-only read resets external
-    # rows' first_seen every run)
-    prev = archive.read(config.name, external=True) if prev_version else None
-    # 0. datapatch cleaning: the dataset's prop.* lookup tables rewrite
+    # later failed validation must not feed timestamps or deltas
+    prev_version = archive.last_successful(name)
+    # the first_seen index must cover EXTERNAL statements too: an
+    # analyzer/enricher re-run would otherwise reset first_seen on every
+    # external row each night (the internal-only read would drop their
+    # ids from the index and propagate_first_seen would coalesce to the
+    # new run_time)
+    prev = (
+        archive.read(name, version=prev_version, external=True)
+        if prev_version else None
+    )
+    # datapatch cleaning: the dataset's prop.* lookup tables rewrite
     # values before anything downstream sees them (the reference cleans at
     # emit time — zavod/zavod/runtime/lookups.py:52-83); map-only stage
-    if config.lookups:
+    if lookups:
         from opensanctions_spark.functions.lookups import apply_statement_lookups
 
-        statements = apply_statement_lookups(statements, config.lookups)
+        statements = apply_statement_lookups(statements, lookups)
     statements = statements.drop("first_seen").withColumn(
         "last_seen", F.lit(run_time)
     )
-
-    # 1b. resolver rekey (J2) BEFORE the versioned write. The reference's
-    # linker applies to every store access (zavod/zavod/store.py:36-47);
-    # rekeying the incoming statements up front means the stored version
-    # is already canonical, so (a) the bucketed layout clusters on the
-    # FINAL canonical_id and the assembly/delta ride it exchange-free,
-    # and (b) no read-time rekey is needed for the current version. The
-    # previous version is normalized to the CURRENT map too — unless the
-    # manifest proves it was written under the identical map (the
-    # fingerprint fast path), in which case its stored canonical ids and
-    # bucket clustering are consumed as-is. The round-11 rehearsal bug
-    # (prev diffed raw → spurious DEL per merged id) stays fixed: prev
-    # is always map-consistent with the current side here.
-    map_fp = None
-    resolver_dropped = False
+    # resolver rekey BEFORE the versioned write: the stored version is
+    # already canonical, so (a) the bucketed layout clusters on the FINAL
+    # canonical_id and the assembly/delta ride it exchange-free, and (b)
+    # no read-time rekey is needed for the current version
     if canonical_map is not None:
-        from opensanctions_spark.operators.resolve import (
-            apply_canonical,
-            mapping_fingerprint,
-        )
-
-        map_fp = mapping_fingerprint(canonical_map)
-        statements = apply_canonical(statements, canonical_map)
-        if prev is not None and (
-            archive.canonical_fp(config.name, prev_version) != map_fp
-        ):
-            prev = apply_canonical(prev, canonical_map)
-    elif prev is not None and (
-        archive.canonical_fp(config.name, prev_version) is not None
-    ):
-        # the previous version stores resolver-merged canonical ids but
-        # this run has no map: J1 (id-keyed) is unaffected, but the
-        # delta below will diff merged ids against raw ones — surface it
-        resolver_dropped = True
-
-    if prev is not None:
-        # with a resolver map both sides are canonical-consistent, so the
-        # J1 probe keys on (canonical_id, id) rows — the prev
-        # side rides the bucketed clustering with zero exchange and the
-        # current side pays the single canonical_id exchange the write
-        # and assembly want anyway. Mapless runs keep the id-keyed join
-        # (caller-set canonical ids need not match across versions).
-        statements = propagate_first_seen(
-            statements,
-            prev.select("canonical_id", "id", "first_seen"),
-            run_time=run_time,
-            cluster_col="canonical_id" if canonical_map is not None else None,
-        )
-    else:
-        statements = statements.withColumn("first_seen", F.lit(run_time))
-    # 2. versioned write, then read back (single lineage for all consumers).
-    # Written PENDING (success=False): the version is recorded and
-    # debuggable, but the backfill pointer only advances once the whole
-    # run — validation included — completes (mark_successful below), so a
-    # fatal-assertion abort can never poison the next run's backfill.
-    version = archive.write(
-        statements, config.name, version, success=False, canonical_fp=map_fp
+        statements, _ = _rekey(statements, archive, name, None,
+                               canonical_map, map_fp)
+        if prev is not None:
+            prev, _ = _rekey(prev, archive, name, prev_version,
+                             canonical_map, map_fp)
+    if prev is None:
+        return statements.withColumn("first_seen", F.lit(run_time)), None, None
+    # with a resolver map both sides are canonical-consistent, so the
+    # J1 probe keys on (canonical_id, id) rows — the prev
+    # side rides the bucketed clustering with zero exchange and the
+    # current side pays the single canonical_id exchange the write
+    # and assembly want anyway. Mapless runs keep the id-keyed join
+    # (caller-set canonical ids need not match across versions).
+    statements = propagate_first_seen(
+        statements,
+        prev.select("canonical_id", "id", "first_seen"),
+        run_time=run_time,
+        cluster_col="canonical_id" if canonical_map is not None else None,
     )
-    statements = archive.read(config.name, version=version, external=True)
+    return statements, prev, prev_version
 
-    # 3. assembly — one shuffle, persisted for validators + exporters.
-    # With bucketed statement storage the scan is already clustered on
-    # canonical_id (the rekey happened before the write, so the stored
-    # clustering IS the final one) and the assembly runs exchange-free.
-    pre_clustered = archive.is_bucketed(config.name, version)
-    entities = assemble_entities(statements, pre_clustered=pre_clustered).persist()
 
-    # 4. validation — ONE job: per-schema counts and the entity/target
-    # totals come out of a single GROUPING SETS pass over the cached
-    # entity view (the reference's validators share one scan the same way,
-    # zavod/zavod/validators/__init__.py:72-104)
-    from opensanctions_spark.exporters import target_flag
+def _entity_view(archive: StatementArchive, name: str, version: str | None,
+                 canonical_map: DataFrame | None, map_fp: str | None,
+                 ) -> tuple[DataFrame, DataFrame, bool]:
+    """One archived version → (statements, persisted entity view,
+    pre_clustered): the single assembly (A1) that validation and every
+    export consume. With bucketed statement storage the scan is already
+    clustered on canonical_id and the assembly runs exchange-free."""
+    statements = archive.read(name, version=version, external=True)
+    statements, pre_clustered = _rekey(
+        statements, archive, name, version, canonical_map, map_fp
+    )
+    entities = assemble_entities(statements, pre_clustered=pre_clustered)
+    return statements, entities.persist(), pre_clustered
 
+
+def _validate(entities: DataFrame, assertions: list[Assertion]) -> dict:
+    """The shared-scan validators over the persisted entity view: counts,
+    assertion violations and dangling references (J10). Per-schema counts
+    and the entity/target totals come out of ONE GROUPING SETS pass (the
+    reference's validators share one scan the same way,
+    zavod/zavod/validators/__init__.py:72-104)."""
     stat_rows = (
         entities.select(
             "schema",
@@ -459,155 +465,21 @@ def run_dataset(
         .collect()
     )
     schema_counts = {r["schema"]: r["n"] for r in stat_rows if r["g"] == 0}
-    total_row = next(r for r in stat_rows if r["g"] == 1)
-    entity_count = total_row["n"]
-    target_count = total_row["n_target"] or 0
+    total = next(r for r in stat_rows if r["g"] == 1)
     stats: dict[str, float] = {
-        "entity_count": entity_count,
-        "target_count": target_count,
+        "entity_count": total["n"],
+        "target_count": total["n_target"] or 0,
         **{f"schema:{k}": v for k, v in schema_counts.items()},
     }
-    stats.update(_extended_stats(entities, config.assertions))
-    violations = check_assertions(stats, config.assertions)
-    if any(v.startswith("error") for v in violations):
-        entities.unpersist()
-        raise AssertionError("; ".join(violations))
-    dangling = dangling_references(entities).count()
-
-    # issues.json + by-level counts for the index (the reference's
-    # DatasetIssues artifact: validation findings become issue records)
-    from opensanctions_spark.exporters.metadata import write_issues
-
-    issues = [
-        {
-            "level": v.split(":", 1)[0],
-            "message": v.split(": ", 1)[-1],
-            "dataset": config.name,
-        }
-        for v in violations
-    ]
-    if not config.has_user_assertions:
-        # the reference's maintainer nudge: error-LEVEL log, but never
-        # an abort (validators/assertions.py:166-177 sets no abort flag
-        # for it) — so it rides the issues channel, not the violations
-        issues.append(
-            {
-                "level": "error",
-                "message": "Dataset has no assertions.",
-                "dataset": config.name,
-            }
-        )
-    if dangling:
-        issues.append(
-            {
-                "level": "warning",
-                "message": f"{dangling} dangling entity references",
-                "dataset": config.name,
-            }
-        )
-    if resolver_dropped:
-        issues.append(
-            {
-                "level": "warning",
-                "message": (
-                    "previous version was written under a resolver map but "
-                    "this run has none: the delta may report merged ids as "
-                    "ADD/DEL pairs"
-                ),
-                "dataset": config.name,
-            }
-        )
-    os.makedirs(out_dir, exist_ok=True)
-    issue_levels = write_issues(out_dir, issues)
-
-    # 5. exports (shared scan; single_file=False is the cluster path —
-    # range-ordered multi-part sink files, see exporters.export_all)
-    export_counts = export_all(
-        entities, statements, out_dir, dataset=config.name,
-        single_file=single_file, clustered=pre_clustered,
-        version=str(version), run_time=run_time,
-        issue_levels=issue_levels, dataset_meta=config.metadata,
-    )
-
-    # 6. delta vs previous version (D0/D1)
-    if prev is not None:
-        diff = version_diff(hashed_entities(prev), hashed_entities(statements))
-        delta_ops = {
-            r["op"]: r["n"]
-            for r in diff.groupBy("op").agg(F.count("*").alias("n")).collect()
-        }
-        # reference line format: {"op": ..., "entity": {...}} per row
-        # (zavod/zavod/exporters/delta.py:29-38)
-        from opensanctions_spark.operators.delta import delta_export_rows
-
-        delta_out = delta_export_rows(diff, entities).orderBy("canonical_id")
-        if single_file:
-            delta_out = delta_out.coalesce(1)
-        delta_out.select("line").write.mode("overwrite").text(
-            os.path.join(out_dir, "delta.json")
-        )
-    else:
-        delta_ops = {}
-
-    result = RunResult(
-        dataset=config.name,
-        version=version,
-        entity_count=entity_count,
-        statement_count=export_counts.get("statements.csv", 0),
-        target_count=target_count,
-        schema_counts=schema_counts,
-        delta_ops=delta_ops,
-        dangling_count=dangling,
-        violations=violations,
-        export_counts=export_counts,
-    )
-    with open(os.path.join(out_dir, "run.json"), "w") as fh:
-        json.dump(
-            {k: v for k, v in result.__dict__.items()}, fh, indent=2, sort_keys=True
-        )
-    # the run completed (exports + validation): promote the version so
-    # backfill reads resolve it
-    archive.mark_successful(config.name, version)
-    entities.unpersist()
-    return result
-
-
-def crawl_dataset(
-    spark: SparkSession,
-    statements: DataFrame,
-    name: str,
-    archive: StatementArchive,
-    run_time: str,
-    version: str | None = None,
-    lookups: dict | None = None,
-) -> str:
-    """The standalone crawl stage (``zavod crawl``,
-    ``zavod/zavod/cli/etl.py:24-36``): stamp seen timestamps, propagate
-    first_seen from the previous version (J1), write ONE immutable
-    archive version. Returns the version id — validation/export read it
-    back, so re-running either never re-crawls. ``lookups`` applies the
-    dataset's datapatch cleaning pass first, like the fused run."""
-    if lookups:
-        from opensanctions_spark.functions.lookups import apply_statement_lookups
-
-        statements = apply_statement_lookups(statements, lookups)
-    prev_version = archive.latest(name)
-    # the first_seen index must cover EXTERNAL statements too: an
-    # analyzer/enricher re-run would otherwise reset first_seen on every
-    # external row each night (the internal-only read would drop their
-    # ids from the index and propagate_first_seen would coalesce to the
-    # new run_time)
-    prev = archive.read(name, external=True) if prev_version else None
-    statements = statements.drop("first_seen").withColumn(
-        "last_seen", F.lit(run_time)
-    )
-    if prev is not None:
-        statements = propagate_first_seen(
-            statements, prev.select("id", "first_seen"), run_time=run_time
-        )
-    else:
-        statements = statements.withColumn("first_seen", F.lit(run_time))
-    return archive.write(statements, name, version)
+    stats.update(_extended_stats(entities, assertions))
+    violations = check_assertions(stats, assertions)
+    return {
+        "entity_count": stats["entity_count"],
+        "target_count": stats["target_count"],
+        "schema_counts": schema_counts,
+        "dangling_count": dangling_references(entities).count(),
+        "violations": violations,
+    }
 
 
 def _delta_artifact_nonempty(path: str) -> bool:
@@ -626,27 +498,166 @@ def _delta_artifact_nonempty(path: str) -> bool:
     return False
 
 
-def _entity_stats(entities: DataFrame) -> tuple[int, int, dict[str, int]]:
-    """(entity_count, target_count, schema_counts) in ONE GROUPING SETS
-    pass over the entity view — the shared validator scan."""
-    from opensanctions_spark.exporters import target_flag
+def _write_delta(prev: DataFrame | None, statements: DataFrame,
+                 entities: DataFrame, archive: StatementArchive, name: str,
+                 version: str, out_dir: str, single_file: bool,
+                 ) -> dict[str, int]:
+    """The ADD/MOD/DEL delta (D0/D1) of ``statements`` against the
+    caller's baseline ``prev`` → ``delta.json`` + ``delta_index.json``;
+    returns the per-op counts. No baseline, no delta."""
+    if prev is None:
+        return {}
+    diff = version_diff(hashed_entities(prev), hashed_entities(statements))
+    delta_ops = {
+        r["op"]: r["n"]
+        for r in diff.groupBy("op").agg(F.count("*").alias("n")).collect()
+    }
+    # reference line format: {"op": ..., "entity": {...}} per row
+    # (zavod/zavod/exporters/delta.py:29-38)
+    delta_path = os.path.join(out_dir, "delta.json")
+    delta_out = delta_export_rows(diff, entities).orderBy("canonical_id")
+    if single_file:
+        delta_out = delta_out.coalesce(1)
+    delta_out.select("line").write.mode("overwrite").text(delta_path)
+    # K8/K12: the delta-versions index. The reference
+    # (``zavod/zavod/exporters/metadata/__init__.py:200-256``,
+    # include_latest=True) lists the just-exported version FIRST —
+    # its delta.json ships alongside the index even though the
+    # version may still be pending promotion — and then only prior
+    # versions whose delta artifact actually exists and is
+    # non-empty, so the index never points at missing files.
+    indexable = [
+        v for v in archive.successful_versions(name)
+        if v != version
+        and _delta_artifact_nonempty(
+            os.path.join(
+                os.path.dirname(archive.version_path(name, v)), "delta.json"
+            )
+        )
+    ]
+    if _delta_artifact_nonempty(delta_path):
+        indexable.append(version)
+    write_delta_index(out_dir, name, indexable)
+    return delta_ops
 
-    stat_rows = (
-        entities.select(
-            "schema",
-            target_flag(F.col("properties")).cast("long").alias("is_target"),
-        )
-        .groupingSets([["schema"], []], "schema")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("is_target").alias("n_target"),
-            F.grouping("schema").alias("g"),
-        )
-        .collect()
+
+def run_dataset(
+    spark: SparkSession,
+    statements: DataFrame,
+    config: DatasetConfig,
+    archive: StatementArchive,
+    out_dir: str,
+    run_time: str,
+    version: str | None = None,
+    canonical_map: DataFrame | None = None,
+    single_file: bool = True,
+) -> RunResult:
+    """Execute the full pipeline for one dataset run.
+
+    ``canonical_map`` is the resolver's (entity_id, canonical_id)
+    snapshot; when given, statements are rekeyed through it (J2,
+    broadcast) before assembly — the reference applies its linker the
+    same way, at store-read time (``zavod/zavod/store.py:36-47``), so
+    merged entities collapse into one canonical group in A1."""
+    map_fp = _map_fingerprint(canonical_map)
+    stamped, prev, prev_version = _stamp(
+        statements, archive, config.name, run_time, config.lookups,
+        canonical_map, map_fp,
     )
-    schema_counts = {r["schema"]: r["n"] for r in stat_rows if r["g"] == 0}
-    total = next(r for r in stat_rows if r["g"] == 1)
-    return total["n"], total["n_target"] or 0, schema_counts
+    # the previous version stores resolver-merged canonical ids but this
+    # run has no map: J1 (id-keyed) is unaffected, but the delta below
+    # will diff merged ids against raw ones — surface it
+    resolver_dropped = (
+        canonical_map is None
+        and prev_version is not None
+        and archive.canonical_fp(config.name, prev_version) is not None
+    )
+    # versioned write, then read back (single lineage for all consumers).
+    # Written PENDING (success=False): the version is recorded and
+    # debuggable, but the backfill pointer only advances once the whole
+    # run — validation included — completes (mark_successful below), so a
+    # fatal-assertion abort can never poison the next run's backfill.
+    version = archive.write(
+        stamped, config.name, version, success=False, canonical_fp=map_fp
+    )
+    statements, entities, pre_clustered = _entity_view(
+        archive, config.name, version, canonical_map, map_fp
+    )
+    report = _validate(entities, config.assertions)
+    violations = report["violations"]
+    if any(v.startswith("error") for v in violations):
+        entities.unpersist()
+        raise AssertionError("; ".join(violations))
+
+    # issues.json + by-level counts for the index (the reference's
+    # DatasetIssues artifact: validation findings become issue records)
+    issues = [v.split(": ", 1) for v in violations]  # "<level>: <message>"
+    if not config.has_user_assertions:
+        # the reference's maintainer nudge: error-LEVEL log, but never
+        # an abort (validators/assertions.py:166-177 sets no abort flag
+        # for it) — so it rides the issues channel, not the violations
+        issues.append(("error", "Dataset has no assertions."))
+    if report["dangling_count"]:
+        issues.append(
+            ("warning", f"{report['dangling_count']} dangling entity references")
+        )
+    if resolver_dropped:
+        issues.append(("warning", (
+            "previous version was written under a resolver map but this run "
+            "has none: the delta may report merged ids as ADD/DEL pairs"
+        )))
+    os.makedirs(out_dir, exist_ok=True)
+    issue_levels = write_issues(out_dir, [
+        {"level": level, "message": message, "dataset": config.name}
+        for level, message in issues
+    ])
+
+    # exports (shared scan; single_file=False is the cluster path —
+    # range-ordered multi-part sink files, see exporters.export_all)
+    export_counts = export_all(
+        entities, statements, out_dir, dataset=config.name,
+        single_file=single_file, clustered=pre_clustered,
+        version=str(version), run_time=run_time,
+        issue_levels=issue_levels, dataset_meta=config.metadata,
+    )
+    delta_ops = _write_delta(
+        prev, statements, entities, archive, config.name, version, out_dir,
+        single_file,
+    )
+    result = RunResult(
+        dataset=config.name,
+        version=version,
+        statement_count=export_counts.get("statements.csv", 0),
+        delta_ops=delta_ops,
+        export_counts=export_counts,
+        **report,
+    )
+    with open(os.path.join(out_dir, "run.json"), "w") as fh:
+        json.dump(result.__dict__, fh, indent=2, sort_keys=True)
+    # the run completed (exports + validation): promote the version so
+    # backfill reads resolve it
+    archive.mark_successful(config.name, version)
+    entities.unpersist()
+    return result
+
+
+def crawl_dataset(
+    spark: SparkSession,
+    statements: DataFrame,
+    name: str,
+    archive: StatementArchive,
+    run_time: str,
+    version: str | None = None,
+    lookups: dict | None = None,
+) -> str:
+    """The standalone crawl stage (``zavod crawl``,
+    ``zavod/zavod/cli/etl.py:24-36``): stamp seen timestamps, propagate
+    first_seen from the previous successful version (J1), write ONE
+    immutable archive version. Returns the version id — validation/export
+    read it back, so re-running either never re-crawls. ``lookups``
+    applies the dataset's datapatch cleaning pass first, like the run."""
+    stamped, _, _ = _stamp(statements, archive, name, run_time, lookups)
+    return archive.write(stamped, name, version)
 
 
 def validate_dataset(
@@ -662,36 +673,12 @@ def validate_dataset(
     archived statements and run the shared-scan validators + assertion
     checks WITHOUT exporting. Returns the validation manifest."""
     version = version or archive.last_successful(name)
-    statements = archive.read(name, version=version, external=True)
-    if canonical_map is not None:
-        from opensanctions_spark.operators.resolve import apply_canonical
-
-        statements = apply_canonical(statements, canonical_map)
-    pre_clustered = (
-        canonical_map is None
-        and version is not None
-        and archive.is_bucketed(name, version)
+    _, entities, _ = _entity_view(
+        archive, name, version, canonical_map, _map_fingerprint(canonical_map)
     )
-    entities = assemble_entities(statements, pre_clustered=pre_clustered).persist()
-    entity_count, target_count, schema_counts = _entity_stats(entities)
-    stats = {
-        "entity_count": entity_count,
-        "target_count": target_count,
-        **{f"schema:{k}": v for k, v in schema_counts.items()},
-    }
-    stats.update(_extended_stats(entities, assertions or []))
-    violations = check_assertions(stats, assertions or [])
-    dangling = dangling_references(entities).count()
+    report = _validate(entities, assertions or [])
     entities.unpersist()
-    return {
-        "dataset": name,
-        "version": version or archive.latest(name),
-        "entity_count": entity_count,
-        "target_count": target_count,
-        "schema_counts": schema_counts,
-        "dangling_count": dangling,
-        "violations": violations,
-    }
+    return {"dataset": name, "version": version, **report}
 
 
 def export_dataset(
@@ -711,32 +698,18 @@ def export_dataset(
     the ADD/MOD/DEL delta against the previous SUCCESSFUL version.
 
     ``version=None`` exports the newest RECORDED version — deliberately
-    the working-directory semantics of ``zavod export`` (crawl → export
-    runs before promotion, so the version being exported is typically
-    still pending); published-only reads go through ``archive.read`` /
-    ``--as-of``."""
-    import os
-
+    the working-directory semantics of ``zavod export``. After a
+    ``crawl`` that is the crawled version, already promoted (the crawl
+    writes it successful); after a ``run`` that aborted on a fatal
+    assertion it is that run's pending version. Published-only reads go
+    through ``archive.read`` / ``--as-of``."""
     version = version or archive.latest(name)
     if version is None:
         raise ValueError(f"no archived versions for dataset {name!r}")
-    statements = archive.read(name, version=version, external=True)
-    # bucketed archive reads feed a clustering-free assembly; a resolver
-    # rekey invalidates it UNLESS the manifest fingerprint proves the
-    # version was already written under this exact map (§21c fast path)
-    pre_clustered = archive.is_bucketed(name, version)
-    if canonical_map is not None:
-        from opensanctions_spark.operators.resolve import (
-            apply_canonical,
-            mapping_fingerprint,
-        )
-
-        if archive.canonical_fp(name, version) != mapping_fingerprint(
-            canonical_map
-        ):
-            statements = apply_canonical(statements, canonical_map)
-            pre_clustered = False
-    entities = assemble_entities(statements, pre_clustered=pre_clustered).persist()
+    map_fp = _map_fingerprint(canonical_map)
+    statements, entities, pre_clustered = _entity_view(
+        archive, name, version, canonical_map, map_fp
+    )
     export_counts = export_all(
         entities, statements, out_dir, dataset=name,
         single_file=single_file, clustered=pre_clustered,
@@ -755,53 +728,16 @@ def export_dataset(
         v for v in archive.successful_versions(name)
         if v < version and v in readable
     ]
-    prior = priors[-1] if priors else None
-    delta_ops: dict[str, int] = {}
-    if prior is not None:
-        prev_stmts = archive.read(name, version=prior, external=True)
-        # the linker applies to EVERY store read (store.py:36-47) — the
-        # delta's prior side included, same fix as run_dataset (r11)
-        if canonical_map is not None:
-            from opensanctions_spark.operators.resolve import apply_canonical
-
-            prev_stmts = apply_canonical(prev_stmts, canonical_map)
-        diff = version_diff(
-            hashed_entities(prev_stmts), hashed_entities(statements)
+    prev = None
+    if priors:
+        prev, _ = _rekey(
+            archive.read(name, version=priors[-1], external=True),
+            archive, name, priors[-1], canonical_map, map_fp,
         )
-        delta_ops = {
-            r["op"]: r["n"]
-            for r in diff.groupBy("op").agg(F.count("*").alias("n")).collect()
-        }
-        from opensanctions_spark.operators.delta import delta_export_rows
-
-        delta_out = delta_export_rows(diff, entities).orderBy("canonical_id")
-        if single_file:
-            delta_out = delta_out.coalesce(1)
-        delta_out.select("line").write.mode("overwrite").text(
-            os.path.join(out_dir, "delta.json")
-        )
-        # K8/K12: the delta-versions index. The reference
-        # (``zavod/zavod/exporters/metadata/__init__.py:200-256``,
-        # include_latest=True) lists the just-exported version FIRST —
-        # its delta.json ships alongside the index even though the
-        # version is still pending promotion — and then only prior
-        # versions whose delta artifact actually exists and is
-        # non-empty, so the index never points at missing files.
-        from opensanctions_spark.exporters.metadata import write_delta_index
-
-        indexable = [
-            v for v in archive.successful_versions(name)
-            if v != version
-            and _delta_artifact_nonempty(
-                os.path.join(
-                    os.path.dirname(archive.version_path(name, v)),
-                    "delta.json",
-                )
-            )
-        ]
-        if _delta_artifact_nonempty(os.path.join(out_dir, "delta.json")):
-            indexable.append(version)
-        write_delta_index(out_dir, name, indexable)
+    delta_ops = _write_delta(
+        prev, statements, entities, archive, name, version, out_dir,
+        single_file,
+    )
     entities.unpersist()
     return {
         "dataset": name,

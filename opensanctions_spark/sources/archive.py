@@ -221,16 +221,27 @@ class StatementArchive:
             if last == version:
                 last = max(successful) if successful else None
         os.makedirs(self._dataset_dir(dataset), exist_ok=True)
-        with open(self._manifest_path(dataset), "w") as fh:
-            json.dump(
-                {
-                    "versions": versions,
-                    "last_successful": last,
-                    "successful": sorted(successful),
-                    "canonical_fps": fps,
-                },
-                fh,
-            )
+        # write-then-rename: a crash mid-dump leaves the previous manifest
+        # intact instead of a truncated one that no read can parse
+        path = self._manifest_path(dataset)
+        tmp = f"{path}.{os.getpid()}.tmp"
+        try:
+            with open(tmp, "w") as fh:
+                json.dump(
+                    {
+                        "versions": versions,
+                        "last_successful": last,
+                        "successful": sorted(successful),
+                        "canonical_fps": fps,
+                    },
+                    fh,
+                )
+                fh.flush()
+                os.fsync(fh.fileno())
+            os.replace(tmp, path)
+        finally:
+            if os.path.exists(tmp):  # only after a failed write
+                os.remove(tmp)
 
     def resolve_as_of(self, dataset: str, as_of: str) -> str:
         """The newest SUCCESSFUL version whose id is ≤ ``as_of`` and whose

@@ -20,7 +20,10 @@ from __future__ import annotations
 
 import json
 import os
+import re
+from concurrent.futures import ThreadPoolExecutor
 
+import pytest
 from pyspark.sql import functions as F
 
 from opensanctions_spark.model.melt import finish_statements
@@ -30,7 +33,14 @@ from opensanctions_spark.operators.resolve import (
     mapping_fingerprint,
 )
 from opensanctions_spark.operators.timestamps import propagate_first_seen
-from opensanctions_spark.plans.run import DatasetConfig, run_dataset
+from opensanctions_spark.plans.run import (
+    Assertion,
+    DatasetConfig,
+    crawl_dataset,
+    export_dataset,
+    run_dataset,
+    validate_dataset,
+)
 from opensanctions_spark.sources.archive import StatementArchive
 
 
@@ -263,3 +273,95 @@ def test_compact_carries_fingerprint_forward(spark, tmp_path):
     new_version = archive.compact("fx", target_bytes=1 << 30)
     if new_version is not None:
         assert archive.canonical_fp("fx", new_version) == "5:123"
+
+
+def test_crawl_after_failed_first_run(spark, tmp_path):
+    """A first run that aborts on a fatal assertion leaves a pending
+    version and no successful one. A crawl into the same archive then
+    has no previous version to propagate first_seen from: it must stamp
+    every row with its own run time, not fail on the pending version."""
+    archive = StatementArchive(spark, str(tmp_path / "arch"))
+    config = DatasetConfig(
+        name="fx", assertions=[Assertion("entity_count", "min", 100)]
+    )
+    with pytest.raises(AssertionError, match="entity_count"):
+        run_dataset(
+            spark, _stmts(spark, ROWS_V1), config, archive,
+            str(tmp_path / "o1"), run_time="2026-08-01T00:00:00",
+            version="20260801-000000",
+        )
+    assert archive.latest("fx") == "20260801-000000"
+    assert archive.last_successful("fx") is None
+
+    version = crawl_dataset(
+        spark, _stmts(spark, ROWS_V2), "fx", archive,
+        run_time="2026-08-13T00:00:00", version="20260813-000000",
+    )
+    stamped = archive.read("fx", version=version, external=True)
+    assert {r["first_seen"] for r in stamped.collect()} == {
+        "2026-08-13T00:00:00"
+    }
+
+
+def _output_files(out_dir: str) -> dict[str, bytes]:
+    """Every file under an output dir by relative path → bytes; Spark's
+    per-job UUID is stripped from part-file names so two writes of the
+    same rows compare equal."""
+    files = {}
+    for root, _, names in os.walk(out_dir):
+        for n in names:
+            path = os.path.join(root, n)
+            rel = os.path.relpath(path, out_dir)
+            with open(path, "rb") as fh:
+                files[re.sub(r"(part-\d+)-[0-9a-f-]{36}", r"\1", rel)] = fh.read()
+    return files
+
+
+def test_run_matches_staged_lifecycle(spark, tmp_path):
+    """``run_dataset`` and crawl → validate → export are one mechanism:
+    over two versions they agree on every count and on every output
+    file. Only ``run.json`` and ``issues.json`` are the run's own. The
+    two lifecycles touch disjoint archives and output dirs, so each
+    version's pair runs concurrently on the shared session (each export
+    is bound by per-job latency, not by the 3-entity input)."""
+    config = DatasetConfig(name="fx", assertions=[])
+    fused = StatementArchive(spark, str(tmp_path / "fused"))
+    staged = StatementArchive(spark, str(tmp_path / "staged"))
+
+    def run(rows, version, run_time, out):
+        return run_dataset(spark, _stmts(spark, rows), config, fused, out,
+                           run_time=run_time, version=version)
+
+    def stage(rows, version, run_time, out):
+        crawl_dataset(spark, _stmts(spark, rows), "fx", staged,
+                      run_time=run_time, version=version)
+        report = validate_dataset(spark, staged, "fx", version=version)
+        export = export_dataset(spark, staged, "fx", out,
+                                run_time=run_time, version=version)
+        return report, export
+
+    for rows, version, run_time in (
+        (ROWS_V1, "20260801-000000", "2026-08-01T00:00:00"),
+        (ROWS_V2, "20260813-000000", "2026-08-13T00:00:00"),
+    ):
+        run_out = str(tmp_path / "run" / version)
+        stage_out = str(tmp_path / "stage" / version)
+        with ThreadPoolExecutor(2) as pool:
+            ran = pool.submit(run, rows, version, run_time, run_out)
+            stages = pool.submit(stage, rows, version, run_time, stage_out)
+            result = ran.result(timeout=600)
+            report, export = stages.result(timeout=600)
+
+        assert (result.entity_count, result.target_count,
+                result.schema_counts) == (
+            report["entity_count"], report["target_count"],
+            report["schema_counts"],
+        )
+        assert result.delta_ops == export["delta_ops"]
+        assert result.export_counts == export["export_counts"]
+        run_files = _output_files(run_out)
+        assert {"run.json", "issues.json"} <= set(run_files)
+        del run_files["run.json"], run_files["issues.json"]
+        assert run_files == _output_files(stage_out)
+    assert result.delta_ops == {"ADD": 1}
+    assert "delta_index.json" in run_files

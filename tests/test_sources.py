@@ -93,6 +93,34 @@ def test_archive_external_filter_pushdown(spark, sf_dir, tmp_path):
     assert "PushedFilters" in plan and "external" in plan
 
 
+def test_archive_manifest_survives_crash_mid_write(tmp_path, monkeypatch):
+    """A crash while versions.json is rewritten leaves the previous
+    manifest loadable and unchanged: the rewrite goes to a temp file that
+    replaces the manifest only once it is complete."""
+    import os
+
+    import opensanctions_spark.sources.archive as archive_mod
+
+    arch = StatementArchive(None, str(tmp_path / "archive"))
+    arch._record_version("ds", "20260801-000000")
+    arch._record_version("ds", "20260802-000000", success=False)
+    before = (arch.versions("ds"), arch.last_successful("ds"))
+    assert before == (["20260801-000000", "20260802-000000"], "20260801-000000")
+
+    def torn_dump(obj, fh, **kwargs):
+        fh.write('{"versions": ["2026')
+        raise OSError("disk full")
+
+    monkeypatch.setattr(archive_mod.json, "dump", torn_dump)
+    with pytest.raises(OSError, match="disk full"):
+        arch.mark_successful("ds", "20260802-000000")
+    monkeypatch.undo()
+
+    assert (arch.versions("ds"), arch.last_successful("ds")) == before
+    assert arch.successful_versions("ds") == ["20260801-000000"]
+    # the torn temp file is cleaned up
+    assert os.listdir(tmp_path / "archive" / "ds") == ["versions.json"]
+
 def test_cache_lookup_ttl(spark):
     cache = spark.createDataFrame(
         [

@@ -5,6 +5,7 @@ and position categorisation pinned to
 
 from __future__ import annotations
 
+import os
 from datetime import datetime
 from types import SimpleNamespace
 
@@ -420,18 +421,30 @@ def test_categorised_position_qids():
     assert got == {"Q123": True, "Q456": False}
 
 
+#: the reference's crawler tree, in a checkout of the reference beside
+#: this repository's own
+REFERENCE_DATASETS = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    "reference",
+    "datasets",
+)
+
+
+@pytest.mark.skipif(
+    not os.path.isdir(REFERENCE_DATASETS),
+    reason="no reference checkout; the explicit import tests above still run",
+)
 def test_full_import_census_resolves():
     """Every DISTINCT single-line zavod import across all 483 reference
     crawlers resolves on a package-name swap (multi-line parenthesised
     forms are covered by the explicit import tests above); the known
     irreducible exceptions are pinned."""
-    import os
     import subprocess
 
     out = subprocess.run(
         ["grep", "-rhE", "^from zavod[. ]|^import zavod",
-         *[os.path.join("/root/reference/datasets", d)
-           for d in os.listdir("/root/reference/datasets")]],
+         *[os.path.join(REFERENCE_DATASETS, d)
+           for d in os.listdir(REFERENCE_DATASETS)]],
         capture_output=True, text=True,
     ).stdout
     known_unresolved = {
