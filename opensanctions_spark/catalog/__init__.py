@@ -16,7 +16,10 @@ Cross-engine determinism rules used throughout (see tools/check_oracle.py):
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import json
+import re
+from collections.abc import Callable, Iterable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -24,6 +27,8 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
+
+_HISTORY = re.compile(r"CORRECTNESS_r(\d+)\.json")
 
 
 def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
@@ -124,267 +129,20 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df
 
 
-#: The build driver records correctness rows for the FIRST 50 entries of
-#: ``queries()``. Lifetime coverage: every catalog query has at least one
-#: green driver row and zero lifetime driver failures (rounds 1-11).
-#:
-#: ROUND-13 ROTATION (VERDICT r12 task 2, promoted VERBATIM from the
-#: pre-staged section): head-50 = text_langid (the r12 slip) + the 7
-#: round-8 cohort leftovers + the first 42 of the round-9 cohort. No
-#: round-12 or round-13 addition enters the head (round 12 changed
-#: existing rows in place; round-13 additions, if any, stage at the
-#: HEAD of the ROUND 14 section). Done-criterion: CORRECTNESS_r13.json
-#: keys set-equal to this list.
-#:
-#: PRE-STAGED ROTATION FOR FUTURE ROUNDS (promote mechanically; each
-#: slip cascades one name into the next section):
-#:   ROUND 14 head-50 = the round-9 cohort leftovers + the first 42 of
-#:     the round-10 head — the "ROUND 14" section below, verbatim.
-#:   ROUND 15 head-50 = the round-10 head leftovers (8) + the round-11
-#:     head's first 42 (its addition + the r5 leftovers + 34 of the r6
-#:     cohort) — the "ROUND 15" section below, verbatim.
-#:   ROUND 16 onward: the rest of the round-11 head, then the round-12
-#:     and round-13 heads (freshest), as they age past two rounds.
-DRIVER_PRIORITY: list[str] = [
-    # ==== ROUND 13 head-50 ==========================================================
-    # -- round-8 cohort leftovers (8, incl. the r12 slip; last checked r8) ---------
-    "text_langid",
-    "text_mojibake_scan",
-    "text_pii_redact",
-    "text_pii_scan",
-    "text_quality",
-    "text_token_count",
-    "text_top_bigrams",
-    "wikidata_deref",
-    # -- round-9 cohort, first 42 -------------------------------------------------
-    "a12_assertions",
-    "a2_facets_grouping_sets",
-    "ann_cosine_fast",
-    "ann_kmeans_loop",
-    "ann_lsh_hyperplane",
-    "ann_recall_meta",
-    "chunk_documents",
-    "contamination_bloom",
-    "dedup_lsh_recall",
-    "dedup_minhash_capped",
-    "dedup_near_cluster",
-    "dedup_near_cluster_star",
-    "dedup_paragraph_exact",
-    "dedup_semantic_semdedup",
-    "dedup_url_canonical",
-    "f16_make_security",
-    "f17_make_identification",
-    "graph_component_histogram",
-    "graph_degree_centrality",
-    "graph_pagerank",
-    "j13_lookup_module",
-    "j5_custom_scorer_udf",
-    "j5_min_score_ratio",
-    "j5_reference_scorer",
-    "mm_audio_energy",
-    "mm_phash_dedup",
-    "pipeline_enrich_expand",
-    "pipeline_xref_resolve",
-    "q12_shipmode_priority",
-    "q20_excess_suppliers",
-    "q21_waiting_suppliers",
-    "q2_min_cost_supplier",
-    "q7_volume_shipping",
-    "q9_product_profit",
-    "s6_excel_distributed",
-    "s7_pdf_scanned",
-    "sample_quality_weighted",
-    "sample_token_budget",
-    "search_bm25",
-    "search_inverted_index",
-    "store_view_adjacency",
-    "stream_curate_corpus",
-    # ==== the driver's 50-row budget ends here ================================
-    # ==== ROUND 14 head-50 (promote in round 14) ====================================
-    # -- round-13 additions stage here, FIRST (none so far) -----------------------
-    # -- round-9 cohort leftovers (8) ----------------------------------------------
-    "stream_stateful_totals",
-    "text_bigram_lm_score",
-    "text_bpe_train",
-    "text_oov_rate",
-    "text_quality_classifier",
-    "text_repetition",
-    "text_tfidf_topk",
-    "text_vocab_coverage",
-    # -- round-10 head, first 42 (checked r10) --------------------------------------
-    "text_bpe_encode",
-    "ann_ivfpq_recall",
-    "graph_risk_propagation",
-    "graph_risk_propagation_converged",
-    "dedup_substring_spans",
-    "dedup_substring_cut",
-    "ann_pq_adc",
-    "ann_ivf_pq",
-    "a1_entity_assembly",
-    "a2_entity_counts",
-    "a3_fill_rate",
-    "a5_last_change",
-    "a7_issue_counts",
-    "a8_t4_prefix_date_dedup",
-    "d0_d1_version_delta",
-    "d2_d3_union_dedupe",
-    "f12_t5_active_status",
-    "f18_make_sanction",
-    "f19_make_occupancy",
-    "f1_f2_date_parse",
-    "f20_make_address",
-    "f3_f14_f15_text_guards",
-    "f5_name_cleaning",
-    "f6_number_parse",
-    "f8_deterministic_ids",
-    "j10_dangling_anti_join",
-    "j12_semi_join_gate",
-    "j13_lookup_join",
-    "j1_timestamp_join",
-    "j2_canonical_rekey",
-    "j3_adjacency_region_revenue",
-    "j6_canonical_map",
-    "j6_incremental_resolver",
-    "j8_same_id_equijoin",
-    "k10_maritime",
-    "k11_sql_load_prep",
-    "k2_statements_csv",
-    "k3_simple_csv",
-    "k4_nested_json",
-    "k5_senzing",
-    "k6_names_txt",
-    "k7_statistics",
-    # ==== ROUND 15 head-50 (promote in round 15) ====================================
-    # -- round-10 head leftovers (8) -------------------------------------------------
-    "k9_securities",
-    "p1_target_filter",
-    "pipeline_curate_corpus",
-    "pipeline_curate_increment",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q8_market_share",
-    "s11_name_extraction",
-    # -- round-11 head additions/leftovers (checked r11) --------------------------
-    "text_bpe_apply",
-    "s13_compaction_plan",
-    "s9_p2_statement_filters",
-    "scd2_entity_history",
-    "skew_salted_agg",
-    "skew_salted_join",
-    "t2_t3_facet_topk",
-    "t6_key_skew_profile",
-    # -- round-6 cohort, first 34 (checked r11) ------------------------------------
-    "a10_edge_cleanup",
-    "a4_program_facets",
-    "a9_name_reduction",
-    "approx_distinct_users",
-    "approx_quantile_contract",
-    "audit_source_columns",
-    "d4_change_detection",
-    "dedup_exact",
-    "events_json_extract",
-    "events_variant_extract",
-    "f10_address_compose",
-    "f11_crypto_wallets",
-    "f13_occupancy_status",
-    "f7_identifier_checksums",
-    "funnel_view_click_purchase",
-    "j11_self_reference",
-    "j4_recursive_expansion",
-    "j5_t1_blocking_topk",
-    "j7_edge_dedupe_merge",
-    "j9_match_rules",
-    "mm_decode_ppm_real",
-    "mm_decode_wav_real",
-    "p7_person_cutoff",
-    "pivot_status_counts",
-    "q10_returned_items",
-    "q13_customer_distribution",
-    "q14_promo_revenue",
-    "q16_supplier_variety",
-    "q18_large_orders",
-    "q4_order_priority",
-    "q5_local_supplier_volume",
-    "q6_forecast_revenue",
-    "rollup_revenue",
-    "s10_archive_backfill",
-    # ==== ROUND 16+ tail ============================================================
-    # -- round-6 cohort leftovers (8, checked r11) ----------------------------------
-    "s11_llm_extraction",
-    "s12_review_workflow",
-    "s12_reviewed_names_emit",
-    "s14_un_sc_parse",
-    "s1_csv_scan",
-    "s2_xml_scan",
-    "s3_json_scan",
-    "s4_html_dom",
-    # -- the round-12 head-50 (freshest; checked r12) --------------------------------
-    "s5_html_table",
-    "s6_excel_scan",
-    "s7_pdf_tables",
-    "s8_cache_ttl",
-    "sketch_merge_distinct",
-    "w1_running_total",
-    "w2_rolling_sum",
-    "w3_rank_family",
-    "ann_centroid_step",
-    "ann_cosine_topk",
-    "ann_ivf_bucketed",
-    "ann_ivf_nprobe2",
-    "asof_last_view_before_click",
-    "contamination_overlap",
-    "dedup_chunk_exact",
-    "dedup_embedding_cosine",
-    "dedup_embedding_fast",
-    "dedup_fuzzy_levenshtein",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "dedup_source_priority",
-    "docs_length_histogram",
-    "docs_length_quantiles",
-    "j7_interval_overlap",
-    "mixture_cap_per_source",
-    "mixture_temperature",
-    "mm_byte_features",
-    "mm_decode_bmp_real",
-    "mm_frame_sample",
-    "mm_resize",
-    "pack_sequences",
-    "pipeline_quality_filter",
-    "q11_important_parts",
-    "q15_top_supplier",
-    "q17_small_quantity_revenue",
-    "q19_disjunctive_revenue",
-    "q22_idle_customers",
-    "rollup_time_hierarchy",
-    "s14_fsf_parse",
-    "s6_xls_scan",
-    "s7_pdf_distributed",
-    "sample_stratified",
-    "sample_train_split",
-    "stream_interval_join",
-    "stream_session_windows",
-    "stream_static_enrich",
-    "stream_windowed_agg",
-    "text_fingerprint",
-    "text_gopher_rules",
-]
-
-
-def _reorder() -> None:
-    """Rebuild the registration dict with DRIVER_PRIORITY names first
-    (names not yet registered are skipped), everything else after in
-    original registration order."""
-    ordered: dict[str, QueryFn] = {}
-    for n in DRIVER_PRIORITY:
-        if n in QUERIES:
-            ordered[n] = QUERIES[n]
-    for n, f in QUERIES.items():
-        if n not in ordered:
-            ordered[n] = f
-    QUERIES.clear()
-    QUERIES.update(ordered)
+def driver_rotation(names: Iterable[str], paths: Iterable[Path]) -> list[str]:
+    """Least recently verified first: sort ``names`` stably by the last
+    round whose ``CORRECTNESS_r<NN>.json`` row passed (rows, schema and
+    hash all match; never = round 0), ties in the given order. The build
+    driver checks the first 50 ``queries()`` entries each round."""
+    last: dict[str, int] = {}
+    for path in paths:
+        m = _HISTORY.fullmatch(Path(path).name)
+        if m is None:
+            continue
+        for name, row in json.loads(Path(path).read_text()).items():
+            if row["rows_match"] and row["schema_match"] and row["hash_match"]:
+                last[name] = max(last.get(name, 0), int(m.group(1)))
+    return sorted(names, key=lambda n: last.get(n, 0))
 
 
 def _import_all() -> None:
@@ -406,4 +164,7 @@ def _import_all() -> None:
 
 
 _import_all()
-_reorder()
+for _name in driver_rotation(
+    list(QUERIES), Path(__file__).parents[2].glob("CORRECTNESS_r*.json")
+):
+    QUERIES[_name] = QUERIES.pop(_name)

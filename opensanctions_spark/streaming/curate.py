@@ -28,6 +28,7 @@ delivery keeps results exact.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,9 +44,13 @@ _ENTRIES_SCHEMA = "fp string, doc_id long, k long, mh long"
 
 
 def _read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
+    """Read ``path``, or an empty frame if it does not exist yet. Every
+    other read error (unknown filesystem, unreadable files) propagates."""
     try:
         return spark.read.schema(schema).parquet(path)
-    except Exception:
+    except AnalysisException as exc:
+        if exc.getCondition() != "PATH_NOT_FOUND":
+            raise
         return spark.createDataFrame([], schema)
 
 

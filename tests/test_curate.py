@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from opensanctions_spark.plans.curate import (
@@ -226,3 +227,16 @@ def test_streaming_curation_accumulates_index(spark, tmp_path):
     fps_idx, bands_idx = load_curation_index(spark, index_dir)
     assert fps_idx.count() == len(ids)
     assert bands_idx.select("doc_id").distinct().count() == len(ids)
+
+
+def test_curation_index_read_errors_are_loud(spark, tmp_path):
+    """Only an index that does not exist yet reads as empty; any other
+    read failure (here an unknown filesystem scheme) must propagate
+    instead of passing for an empty index that would re-admit every
+    duplicate."""
+    from opensanctions_spark.streaming.curate import load_curation_index
+
+    fps, bands = load_curation_index(spark, str(tmp_path / "absent"))
+    assert fps.count() == 0 and bands.count() == 0
+    with pytest.raises(Exception, match="nosuchfs"):
+        load_curation_index(spark, "nosuchfs://bucket/idx")

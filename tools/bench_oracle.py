@@ -15,16 +15,9 @@ import os
 import sys
 import time
 
-import duckdb
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import HEADLINE  # noqa: E402
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 
 def main() -> int:
@@ -33,13 +26,12 @@ def main() -> int:
 
     from opensanctions_spark.session import get_session
     from opensanctions_spark.catalog import ORACLES, QUERIES
+    from opensanctions_spark.testing import duckdb_with_views
 
     spark = get_session("bench-vs-duckdb")
     spark.sparkContext.setLogLevel("ERROR")
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = duckdb_with_views(sf_dir)
 
     # warm both engines; warm every headline PLAN at sf0.001 (same
     # discipline as bench.py — first execution of a plan pays analysis +

@@ -3,12 +3,12 @@
 tools/check_oracle.py runs the same comparison but on the engine's tuned
 session; the driver builds a VANILLA SparkSession (no AQE/Arrow/shuffle
 tuning, different core count) and records only the first N queries()
-entries (r1: exactly 50, registration order). This tool reproduces that
-exact envelope so "driver-green" can be verified before the driver runs:
+entries (exactly 50: the rotation head, least recently verified first).
+This tool reproduces that exact envelope so "driver-green" can be verified before the driver runs:
 
     python tools/driver_sim.py [sf_dir] [first_n]
 
-Every priority query must print ok on a vanilla local[8] session.
+Every head query must print ok on a vanilla local[8] session.
 """
 
 from __future__ import annotations
@@ -17,22 +17,7 @@ import os
 import sys
 import time
 
-import duckdb
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
-
-def canonicalize(df):
-    df = df.reindex(sorted(df.columns), axis=1)
-    for c in df.columns:
-        if df[c].dtype == object:
-            df[c] = df[c].astype(str)
-    return df.sort_values(by=list(df.columns), ignore_index=True)
 
 
 def main() -> int:
@@ -45,10 +30,9 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as e
+    from opensanctions_spark.testing import compare_frames, duckdb_with_views
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = duckdb_with_views(sf_dir)
 
     qs = e.queries()
     oracles = e.oracle_sql()
@@ -57,12 +41,9 @@ def main() -> int:
     for i, (name, fn) in enumerate(list(qs.items())[:first_n]):
         t0 = time.time()
         try:
-            s = canonicalize(fn(spark, sf_dir).toPandas())
-            o = canonicalize(con.sql(oracles[name]).df()) if name in oracles else None
-            ok = o is None or (
-                list(s.columns) == list(o.columns)
-                and len(s) == len(o)
-                and s.equals(o)
+            spark_df = fn(spark, sf_dir).toPandas()
+            ok = name not in oracles or not compare_frames(
+                spark_df, con.sql(oracles[name]).df()
             )
         except Exception as ex:
             ok = False

@@ -1,7 +1,8 @@
-"""Round-13 optimization evidence: write `.explain("formatted")` output
-for headline queries to plans/r14/<query>_<tag>.txt.
+"""Optimization evidence: write `.explain("formatted")` output for
+headline queries to <out_dir>/<query>_<tag>.txt.
 
-Usage: python tools/explain_r14.py <tag> [sf_dir] [query ...]
+Usage: python tools/explain.py <out_dir> <tag> [sf_dir] [query ...]
+  out_dir: e.g. plans/r15 (created if missing)
   tag: "before" or "after" (file suffix)
   sf_dir default /root/testdata/sf0.1
   queries default: the bench HEADLINE list
@@ -16,18 +17,18 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    out_dir, tag = sys.argv[1], sys.argv[2]
+    sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1"
     from bench import HEADLINE
     from opensanctions_spark.catalog import QUERIES
     from opensanctions_spark.session import get_session
 
-    names = sys.argv[3:] or HEADLINE
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "plans", "r14")
+    names = sys.argv[4:] or HEADLINE
     os.makedirs(out_dir, exist_ok=True)
 
-    spark = get_session("explain-r14")
+    spark = get_session("explain")
     spark.sparkContext.setLogLevel("ERROR")
 
     for name in names:

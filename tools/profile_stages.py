@@ -1,8 +1,8 @@
-"""Round-13 per-stage profiler: runs headline queries with the Spark UI
+"""Per-stage profiler: runs headline queries with the Spark UI
 REST API enabled and attributes wall time to stages (executorRunTime,
 shuffle bytes, task counts) so optimization targets the right operator.
 
-Usage: SPARK_GRAFT_SF_DIR=... python tools/profile_r14.py [query ...]
+Usage: SPARK_GRAFT_SF_DIR=... python tools/profile_stages.py [query ...]
 Prints per query: min-of-N wall, then per-stage rows sorted by
 executorRunTime with shuffle read/write bytes.
 """
@@ -30,7 +30,7 @@ def main() -> None:
     names = sys.argv[1:] or HEADLINE
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    builder = SparkSession.builder.appName("profile-r14").master(
+    builder = SparkSession.builder.appName("profile-stages").master(
         f"local[{cpus}]"
     )
     spark = (

@@ -1,8 +1,8 @@
-"""Round-13 full-surface timing sweep: min-of-N wall per catalog query at
+"""Full-surface timing sweep: min-of-N wall per catalog query at
 the given sf_dir, slowest first — finds pathological outliers outside the
 bench headline set.
 
-Usage: python tools/sweep_r13.py [sf_dir] [reps]
+Usage: python tools/sweep.py [sf_dir] [reps]
 """
 
 from __future__ import annotations
@@ -21,7 +21,7 @@ def main() -> None:
     from opensanctions_spark.catalog import QUERIES, load
     from opensanctions_spark.session import get_session
 
-    spark = get_session("sweep-r13")
+    spark = get_session("sweep")
     spark.sparkContext.setLogLevel("ERROR")
     for t in ["region", "nation", "customer", "supplier", "part", "orders",
               "lineitem", "events", "documents", "embeddings"]:
