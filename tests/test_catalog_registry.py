@@ -121,3 +121,27 @@ def test_coverage_doc_query_count_matches_registry():
     )
     # the 'ALL with DuckDB value-check oracles' claim stays true
     assert set(QUERIES) == set(ORACLES)
+
+
+def test_never_driver_checked_queries_lead_the_head():
+    """Any query with ZERO lifetime driver correctness rows (computed from
+    the shipped CORRECTNESS_r*.json history) must sit inside the head-50,
+    or it stays unverified for another full round."""
+    import glob
+    import json
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    seen: set[str] = set()
+    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        with open(path) as f:
+            seen.update(json.load(f))
+    if not seen:  # fresh clone without driver artifacts — nothing to pin
+        return
+    never = [n for n in QUERIES if n not in seen]
+    head = set(list(QUERIES)[:50])
+    stragglers = [n for n in never if n not in head]
+    assert not stragglers, (
+        f"queries with no lifetime driver row are staged BELOW the "
+        f"head-50: {stragglers}"
+    )
